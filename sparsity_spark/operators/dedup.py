@@ -554,7 +554,17 @@ def _cc_labels_driver(edges: DataFrame, universe: DataFrame) -> DataFrame:
         # every undirected link once (halves the collect)
         lambda: edges.where(F.col("src") < F.col("dst")).collect(),
     )
-    nodes = {r[0] for r in id_rows}
+    labels = _min_label_union_find({r[0] for r in id_rows}, edge_rows)
+    t = seed.schema[0].dataType.simpleString()
+    return local_df(edges.sparkSession, sorted(labels.items()), f"id {t}, label {t}")
+
+
+def _min_label_union_find(nodes: set, edges) -> dict:
+    """Component-minimum label of every node in ``nodes`` by union-find
+    over ``edges`` ((a, b, ...) rows). An edge links only when BOTH
+    endpoints are in ``nodes`` — the distributed loop's universe rule
+    (see :func:`_cc_labels_driver`). Shared by the driver CC path and
+    :func:`fold_cluster_store`'s driver regime."""
     parent: dict = {}
 
     def find(x):
@@ -565,7 +575,7 @@ def _cc_labels_driver(edges: DataFrame, universe: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for e in edge_rows:
+    for e in edges:
         a, b = e[0], e[1]
         if a in nodes and b in nodes:
             ra, rb = find(a), find(b)
@@ -573,12 +583,17 @@ def _cc_labels_driver(edges: DataFrame, universe: DataFrame) -> DataFrame:
                 if rb < ra:
                     ra, rb = rb, ra
                 parent[rb] = ra  # component min stays the root
-    t = seed.schema[0].dataType.simpleString()
-    return local_df(
-        edges.sparkSession,
-        sorted((i, find(i)) for i in nodes),
-        f"id {t}, label {t}",
-    )
+    return {i: find(i) for i in nodes}
+
+
+def _driver_cc_rows() -> int:
+    """The driver-side connected-components gate: row counts up to
+    SPARK_GRAFT_DRIVER_CC_ROWS (default 200k; 0 disables) are collected
+    and solved by union-find. The default matches the tiny-loop
+    threshold so both regimes flip together on data size."""
+    import os
+
+    return int(os.environ.get("SPARK_GRAFT_DRIVER_CC_ROWS", "200000"))
 
 
 def duplicate_clusters(
@@ -661,12 +676,8 @@ def duplicate_clusters(
     n_edges = edges.count()
     universe = ids.select(F.col(id_col).alias("id")).distinct()
     # driver fast path (r12 session 4): a measured-tiny edge set skips the
-    # distributed loop entirely — see _cc_labels_driver. Gate env-tunable
-    # (SPARK_GRAFT_DRIVER_CC_ROWS, 0 disables); default matches the
-    # tiny-loop threshold so both regimes flip together on data size.
-    import os as _os
-
-    _driver_rows = int(_os.environ.get("SPARK_GRAFT_DRIVER_CC_ROWS", "200000"))
+    # distributed loop entirely — see _cc_labels_driver and _driver_cc_rows
+    _driver_rows = _driver_cc_rows()
     if 0 < _driver_rows and n_edges <= _driver_rows:
         labels = _cc_labels_driver(edges, universe)
         if not include_singletons:
@@ -710,11 +721,12 @@ def duplicate_clusters(
             mapping = propagated.select(
                 F.col("id").alias("__lid"), F.col("label").alias("__llabel")
             )
-            # `propagated` stays EAGER (it is referenced twice in jumped's
-            # plan — rows and jump mapping — so it must be materialized
-            # before jumped plans against it); `jumped` is lazy and the
-            # fixpoint-sum action materializes it, fusing the round's
-            # checkpoint barrier and convergence test into ONE job
+            # `propagated` is a LAZY checkpoint: jumped's plan references
+            # it twice (rows and jump mapping), and both references read
+            # the one checkpointed RDD, which the first stage to touch it
+            # materializes; `jumped` is lazy too, so the fixpoint-sum
+            # action fuses the round's checkpoint barriers and
+            # convergence test into ONE job
             jumped = (
                 propagated.join(mapping, propagated["label"] == mapping["__lid"], "left")
                 .select(
@@ -1482,13 +1494,25 @@ def band_store(spark, table: str) -> DataFrame:
     Tombstoned docs (r11, :func:`remove_from_band_store`) are anti-joined
     out here (broadcast, deletion-sized), so every screen path forgets
     them immediately; the bucketed scan + broadcast anti-join still
-    plans with no corpus-side Exchange."""
-    df = spark.table(table)
+    plans with no corpus-side Exchange. Reads the tables' current files
+    (:func:`_current_table`)."""
+    df = _current_table(spark, table)
     tt = f"{table}__tombstones"
     if spark.catalog.tableExists(tt):
-        idc = spark.table(tt).columns[0]
-        df = df.join(F.broadcast(spark.table(tt).distinct()), idc, "left_anti")
+        tomb = _current_table(spark, tt)
+        df = df.join(F.broadcast(tomb.distinct()), tomb.columns[0], "left_anti")
     return df
+
+
+def _current_table(spark, table: str) -> DataFrame:
+    """``spark.table`` over the table's CURRENT files. A session caches
+    each table's file listing on first read and only its own writes
+    invalidate it, so after another session (a streaming query's
+    foreachBatch runs in its own) appends to or drops and rewrites the
+    table, a plain read misses the new files or fails on the deleted
+    ones. The refresh is a metadata call; it runs no job."""
+    spark.catalog.refreshTable(table)
+    return spark.table(table)
 
 
 def remove_from_band_store(ids: DataFrame, table: str, id_col: str = "doc_id") -> None:
@@ -2146,13 +2170,15 @@ def resolve_cluster_store(spark, table: str) -> DataFrame:
     immediately; their CLUSTER LABEL may keep naming the forgotten
     minimum until :func:`compact_cluster_store` re-elects — labels are
     opaque component ids, so reads stay internally consistent either
-    way."""
-    store = spark.table(table)
+    way. Reads the tables' current files (:func:`_current_table`), so a
+    session sees folds that another session — a streaming query's —
+    committed since its last read."""
+    store = _current_table(spark, table)
     tt = f"{table}__tombstones"
     if spark.catalog.tableExists(tt):
-        idc = spark.table(tt).columns[0]
-        store = store.join(F.broadcast(spark.table(tt).distinct()), idc, "left_anti")
-    remap = spark.table(f"{table}__remap").select(
+        tomb = _current_table(spark, tt)
+        store = store.join(F.broadcast(tomb.distinct()), tomb.columns[0], "left_anti")
+    remap = _current_table(spark, f"{table}__remap").select(
         F.col("old_id").alias("cluster_id"), F.col("new_id")
     )
     return store.join(F.broadcast(remap), "cluster_id", "left").select(
@@ -2182,9 +2208,35 @@ def fold_cluster_store(
     ids) = min(batch ids, per-cluster corpus minima) — so the folded
     store resolves bit-identically to a full recompute, including the
     hard case where one batch doc BRIDGES two existing clusters (both
-    old ids land in the merge table). Communication: pairs-sized joins +
-    a components loop over a batch-sized graph; the corpus moves
-    nothing.
+    old ids land in the merge table).
+
+    Communication: the corpus moves nothing; everything after the
+    endpoint mapping is pairs- or batch-sized. Two regimes, chosen by
+    the driver connected-components gate (``SPARK_GRAFT_DRIVER_CC_ROWS``,
+    see :func:`_driver_cc_rows`) on MEASURED sizes:
+
+    * **driver** (mapped pairs and batch ids both within the gate): two
+      overlapped bounded reads — a count of the frozen mapped pairs,
+      then their collect when they fit, and a ``limit(cap+1)`` collect
+      of the batch ids flagged stored/fresh. Union-find (:func:`_min_label_union_find`), the new
+      assignments and the merges then run in Python. The two writes go
+      out as one-slice frames, overlapped; only a fold that merges
+      clusters rewrites the remap, and it collects the remap (which
+      every read already broadcasts through the driver) beside the
+      assignment append to compose it one hop deep. An empty append or
+      an unchanged remap is skipped, so a replay writes nothing.
+    * **distributed** (gate 0, or when a bounded read overflows):
+      pairs-sized joins, :func:`duplicate_clusters` over the
+      batch-sized graph, and a checkpointed barrier per derived table.
+      After an overflow it starts from the pairs the count froze, so
+      the endpoint joins run once; the fallback also pays for the count
+      and, beside it, the batch collect (up to ``cap + 1`` rows).
+
+    The gate was tuned for :func:`duplicate_clusters`' edge collect.
+    Where this fold's two regimes cross over is not settled by the
+    repo's benchmark, whose streamed batches all fall below the gate;
+    synthetic increments put it between 200k and 250k mapped pairs for
+    one graph shape.
 
     Replay-idempotent: a re-folded batch maps through its (now stored)
     assignments to already-merged pseudo-nodes, components return
@@ -2214,7 +2266,14 @@ def fold_cluster_store(
         F.coalesce("eb_c", "eb").alias("pb"),
         F.col("ea_c").alias("ca"),
         F.col("eb_c").alias("cb"),
-    ).localCheckpoint(eager=True)  # freeze BEFORE the store tables mutate
+    )
+    cap = _driver_cc_rows()
+    if cap > 0:
+        mapped = _fold_cluster_store_driver(bset, mapped, table, id_col, cap)
+        if mapped is None:
+            return resolve_cluster_store(spark, table)
+    else:
+        mapped = mapped.localCheckpoint(eager=True)  # freeze BEFORE the store tables mutate
     pseudo = (
         mapped.select(F.col("ca").alias("node"))
         .unionByName(mapped.select(F.col("cb").alias("node")))
@@ -2242,7 +2301,6 @@ def fold_cluster_store(
         .select(F.col(id_col).alias("doc_id"), "cluster_id")
         .localCheckpoint(eager=True)
     )
-    num_buckets = _table_bucket_count(spark, table)
     # 2) merges — pseudo-nodes whose component minimum moved
     merges = (
         comp.join(pseudo.select(F.col("node").alias(id_col)), id_col, "leftsemi")
@@ -2264,26 +2322,102 @@ def fold_cluster_store(
     all_remap = composed.unionByName(
         merges.join(old_remap.select("old_id"), "old_id", "left_anti")
     ).localCheckpoint(eager=True)
-    from sparsity_spark.operators.skew import _drop_table_and_location
     from sparsity_spark.util import overlap_jobs
 
-    def _append_assignments():
-        (
-            bucket_partitioned(new_assign, num_buckets, ["doc_id"])
-            .write.mode("append")
-            .bucketBy(num_buckets, "doc_id")
-            .format("parquet")
-            .saveAsTable(table)
-        )
-
-    def _rewrite_remap():
-        _drop_table_and_location(spark, f"{table}__remap")
-        all_remap.write.mode("overwrite").format("parquet").saveAsTable(
-            f"{table}__remap"
-        )
-
-    overlap_jobs(_append_assignments, _rewrite_remap)
+    num_buckets = _table_bucket_count(spark, table)
+    overlap_jobs(
+        lambda: _append_cluster_rows(
+            bucket_partitioned(new_assign, num_buckets, ["doc_id"]), table, num_buckets
+        ),
+        lambda: _rewrite_cluster_remap(all_remap, table),
+    )
     return resolve_cluster_store(spark, table)
+
+
+def _fold_cluster_store_driver(
+    bset: DataFrame, mapped: DataFrame, table: str, id_col: str, cap: int
+) -> DataFrame | None:
+    """The driver regime of :func:`fold_cluster_store`. Returns None once
+    it has folded. When a bounded read overflows ``cap`` it writes
+    nothing and returns ``mapped`` frozen, for the distributed regime to
+    continue from without running the endpoint joins again."""
+    from sparsity_spark.util import local_df, overlap_jobs
+
+    spark = bset.sparkSession
+    stored = spark.table(table).select(
+        F.col("doc_id").alias(id_col), F.lit(True).alias("__stored__")
+    )
+
+    def _pairs():
+        # a lazy local checkpoint whose first action, the count, computes
+        # and caches every partition; the collect then reads the cache.
+        # Two jobs for the count and one for the collect, as many as a
+        # limit(cap + 1) collect takes here (one partition, then four,
+        # then the rest), and an overflow pulls no rows to the driver
+        frozen = mapped.localCheckpoint(eager=False)
+        return frozen, (frozen.collect() if frozen.count() <= cap else None)
+
+    # both reads hit the store before either write below
+    (frozen, pair_rows), batch_rows = overlap_jobs(
+        _pairs, lambda: bset.join(stored, id_col, "left").limit(cap + 1).collect()
+    )
+    if pair_rows is None or len(batch_rows) > cap:
+        return frozen
+    batch = {r[0] for r in batch_rows}
+    fresh = {r[0] for r in batch_rows if r[1] is None}
+    pseudo = {c for r in pair_rows for c in (r[2], r[3]) if c is not None}
+    # the universe is {batch docs ∪ touched pseudo-nodes}, exactly the
+    # distributed regime's `ids`; self-pairs relay nothing
+    labels = _min_label_union_find(
+        batch | pseudo, (r for r in pair_rows if r[0] != r[1])
+    )
+    merges = {p: labels[p] for p in pseudo if labels[p] != p}
+    writes = []
+    if fresh:
+        nb = _table_bucket_count(spark, table)
+        # one slice already writes at most one file per bucket, so the
+        # bucket_partitioned shuffle would buy nothing here
+        assign = local_df(
+            spark,
+            sorted((d, labels[d]) for d in fresh),
+            "doc_id long, cluster_id long",
+        )
+        writes.append(lambda: _append_cluster_rows(assign, table, nb))
+    if merges:
+
+        def _compose_remap():
+            # one hop deep: re-target existing rows through the new
+            # merges, then add the merges themselves. Only a fold that
+            # merges reads the remap, beside the assignment append
+            rows = spark.table(f"{table}__remap").collect()
+            olds = {r[0] for r in rows}
+            remap = [(r[0], merges.get(r[1], r[1])) for r in rows] + sorted(
+                (o, n) for o, n in merges.items() if o not in olds
+            )
+            _rewrite_cluster_remap(
+                local_df(spark, remap, "old_id long, new_id long"), table
+            )
+
+        writes.append(_compose_remap)
+    if writes:
+        overlap_jobs(*writes)
+    return None
+
+
+def _append_cluster_rows(rows: DataFrame, table: str, num_buckets: int) -> None:
+    """Append (doc_id, cluster_id) rows through the store's bucket spec."""
+    rows.write.mode("append").bucketBy(num_buckets, "doc_id").format(
+        "parquet"
+    ).saveAsTable(table)
+
+
+def _rewrite_cluster_remap(remap: DataFrame, table: str) -> None:
+    """Replace the store's merge table with ``remap`` (already frozen)."""
+    from sparsity_spark.operators.skew import _drop_table_and_location
+
+    spark = remap.sparkSession
+    _drop_table_and_location(spark, f"{table}__remap")
+    remap.write.mode("overwrite").format("parquet").saveAsTable(f"{table}__remap")
 
 
 def remove_from_cluster_store(

@@ -544,10 +544,6 @@ def _write_compaction_watermark(spark, table: str, through: int) -> None:
 _UNREAD = object()
 
 
-def _batch_already_folded(spark, table: str, batch_id: int) -> bool:
-    return _fold_screen(spark, table, batch_id)[0]
-
-
 def _fold_screen(spark, table: str, batch_id: int):
     """O(1) replay screen for the non-idempotent stores (r10, advisor
     finding: the old screen re-scanned the store's entire batch_id
@@ -619,7 +615,7 @@ def _record_max_batch(spark, table: str, batch_id: int, known_max=_UNREAD) -> No
     construction); the reverse order would record a batch whose data
     never landed and silently drop it forever. The recorded value is
     ``greatest(old, new)`` — an out-of-order backfill fold (see
-    :func:`_batch_already_folded`) must not LOWER the watermark, or every
+    :func:`_fold_screen`) must not LOWER the watermark, or every
     batch between the backfill id and the true max would re-screen as
     new and re-fold duplicate data."""
     meta = _meta_table(table)
@@ -658,7 +654,7 @@ def merge_count_store(
     only an estimate). The store holds (batch_id, key, c) APPEND-ONLY
     rows bucketed by key: each micro-batch pre-aggregates to one row per
     key, skips entirely if its batch_id was already folded (O(1) probe
-    of a one-row max-batch-id side table — :func:`_batch_already_folded`
+    of a one-row max-batch-id side table — :func:`_fold_screen`
     — so at-least-once delivery appends nothing on replay and the screen
     cost no longer grows with store age), and appends through the
     table's own bucket spec. Counts are the one store whose merge is NOT a set union

@@ -672,7 +672,7 @@ def merge_ohlc_store(
     applies verbatim: an append-only (batch_id, key, bucket, …partial…)
     layout bucketed by (key, bucket), a write-side O(1) batch_id replay
     screen (one-row max-batch-id side table — sketches'
-    ``_batch_already_folded``), and read-side MAX-collapse of raced
+    ``_fold_screen``), and read-side MAX-collapse of raced
     duplicate rows before
     the final merge (identical by construction). Same single-writer
     contract as merge_count_store: the table is married to one

@@ -99,7 +99,7 @@ def _memo_edges(spark, sf_dir: str, kind: str, build) -> DataFrame:
             # from it) was 32 tasks regardless of data size — at sf0.1
             # that is 32 micro-tasks of a ~15 MB table repeated ~10
             # stages per graph query, the measured 32-core overhead
-            # class. Target ~32 MB per bucket (floor 4 for local
+            # class. Target ~8 MB per bucket (floor 4 for local
             # parallelism, cap 256): sf0.1's 1.17 M-edge store lands at
             # 4 buckets; a 100 TB edge set derives thousands — the knob
             # scales with DATA, not core count. The build is checkpointed

@@ -49,9 +49,19 @@ def _scratch_root() -> str:
     return "/tmp"
 
 
+def _usable_cpus() -> int:
+    """Cores this process may run on: its CPU affinity (which taskset and
+    cpusets narrow), else the machine's count where affinity is not
+    available."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
+
+
 def get_spark(app_name: str = "sparsity_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _usable_cpus())
     scratch = _scratch_root()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -750,14 +750,63 @@ def streaming_cluster_maintain(
     test_streaming). The batch's band rows then append through the
     store's bucket spec so the NEXT batch pairs against them.
 
+    Two regimes, chosen per micro-batch by the fold's driver
+    connected-components gate (``SPARK_GRAFT_DRIVER_CC_ROWS``): while
+    the mapped pair increment and the batch fit under it, the fold
+    closes on the driver with one overlapped round of bounded collects
+    and one-slice writes; above it, or when a bounded collect overflows,
+    the distributed fold runs. Both regimes produce the same stores.
+
     Replay-safe end to end: a re-delivered batch's docs map through
     their (now stored) cluster assignments to already-merged
-    pseudo-nodes, the fold appends nothing, and the band append
-    anti-joins to empty — at-least-once delivery cannot corrupt either
-    store. `foreachBatch` because both store updates are batch table
-    writes. ``sink(resolved_df, batch_id)`` observes the post-fold
-    resolved (doc_id, cluster_id) view. Returns the started-ready
+    pseudo-nodes and the fold appends nothing. The band append skips
+    docs whose bands are already stored: such a doc pairs with ITSELF
+    in the batch ⋈ band-store join the screen runs anyway, so the
+    screen costs no read of the band store's ids (which grow with the
+    corpus). The fold and the band append run concurrently, and a crash
+    after either one commits replays to the same stores: with only the
+    fold committed the replay folds nothing and appends the bands once;
+    with only the bands committed the batch's docs pair with each other
+    through the band store too, which adds only pairs the in-batch
+    self-join already holds, so the fold closes the same components.
+    `foreachBatch` because both store updates are batch table writes.
+    ``sink(resolved_df, batch_id)`` observes the post-fold resolved
+    (doc_id, cluster_id) view. Returns the started-ready
     DataStreamWriter."""
+
+    def _process(batch_df, batch_id):
+        _cluster_process_batch(
+            batch_df,
+            batch_id,
+            band_table=band_table,
+            cluster_table=cluster_table,
+            id_col=id_col,
+            text_col=text_col,
+            k=k,
+            num_hashes=num_hashes,
+            bands=bands,
+            sink=sink,
+        )
+
+    return stream_df.writeStream.foreachBatch(_process)
+
+
+def _cluster_process_batch(
+    batch_df,
+    batch_id,
+    *,
+    band_table,
+    cluster_table,
+    id_col,
+    text_col,
+    k,
+    num_hashes,
+    bands,
+    sink,
+):
+    """foreachBatch body of :func:`streaming_cluster_maintain`,
+    module-level so tests can drive a crash replay directly — a replay
+    IS just a re-invocation with the same (batch_df, batch_id)."""
     from pyspark.sql import functions as F
 
     from sparsity_spark.operators.dedup import (
@@ -766,37 +815,40 @@ def streaming_cluster_maintain(
         band_store,
         fold_cluster_store,
     )
+    from sparsity_spark.operators.skew import bucket_partitioned
+    from sparsity_spark.util import overlap_jobs
 
-    def _process(batch_df, batch_id):
-        spark = batch_df.sparkSession
-        nb = band_keys(batch_df, id_col, text_col, k, num_hashes, bands).localCheckpoint(
-            eager=True
+    spark = batch_df.sparkSession
+    nb = band_keys(batch_df, id_col, text_col, k, num_hashes, bands).localCheckpoint(
+        eager=True
+    )
+    store = band_store(spark, band_table)
+    # frozen BEFORE the band append below, which writes the table this
+    # join reads
+    cross = (
+        nb.join(
+            store.select(F.col(id_col).alias("__cid__"), "band", "band_key"),
+            ["band", "band_key"],
         )
-        store = band_store(spark, band_table)
-        cross = (
-            nb.join(
-                store.select(F.col(id_col).alias("__cid__"), "band", "band_key"),
-                ["band", "band_key"],
-            )
-            .select(F.col(id_col).alias("id_a"), F.col("__cid__").alias("id_b"))
-            .distinct()
-        )
-        left = nb.select(F.col(id_col).alias("id_a"), "band", "band_key")
-        right = nb.select(F.col(id_col).alias("id_b"), "band", "band_key")
-        intra = (
-            left.join(right, ["band", "band_key"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        resolved = fold_cluster_store(
-            batch_df.select(id_col), cross.unionByName(intra), cluster_table
-        )
-        new_bands = nb.join(
-            spark.table(band_table).select(id_col).distinct(), id_col, "left_anti"
-        ).localCheckpoint(eager=True)
-        from sparsity_spark.operators.skew import bucket_partitioned
+        .select(F.col(id_col).alias("id_a"), F.col("__cid__").alias("id_b"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    left = nb.select(F.col(id_col).alias("id_a"), "band", "band_key")
+    right = nb.select(F.col(id_col).alias("id_b"), "band", "band_key")
+    intra = (
+        left.join(right, ["band", "band_key"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    # a doc whose bands are already stored pairs with itself in `cross`
+    stored = cross.where(F.col("id_a") == F.col("id_b")).select(
+        F.col("id_a").alias(id_col)
+    )
+    new_bands = nb.join(stored, id_col, "left_anti")
 
+    def _append_bands():
         nbk = _table_bucket_count(spark, band_table)
         (
             bucket_partitioned(new_bands, nbk, ["band", "band_key"])
@@ -805,10 +857,19 @@ def streaming_cluster_maintain(
             .format("parquet")
             .saveAsTable(band_table)
         )
-        if sink is not None:
-            sink(resolved, batch_id)
 
-    return stream_df.writeStream.foreachBatch(_process)
+    # the band append reads only frozen inputs, the fold never reads the
+    # band table, and they write independent tables, so they overlap; a
+    # crash after either one replays to the same stores (see
+    # streaming_cluster_maintain)
+    resolved, _ = overlap_jobs(
+        lambda: fold_cluster_store(
+            batch_df.select(id_col), cross.unionByName(intra), cluster_table
+        ),
+        _append_bands,
+    )
+    if sink is not None:
+        sink(resolved, batch_id)
 
 
 def streaming_topk_maintain(

@@ -514,11 +514,35 @@ def test_write_hash_store_dedups_natural_corpus_twins(spark):
     assert not keep[100] and keep[101]
 
 
-def test_fold_cluster_store_bridges_merges_and_replays(spark):
+def test_fold_cluster_store_bridges_merges_and_replays(spark, monkeypatch):
     """r9 cluster store: the fold must equal a from-scratch closure in
     the hard cases — a batch doc BRIDGING two stored clusters, chained
     merges across two folds (remap compaction), and an exact replay
-    folding to a no-op."""
+    folding to a no-op. Run under both regimes of the driver gate:
+    SPARK_GRAFT_DRIVER_CC_ROWS=0 folds distributed, the default closes
+    each fold on the driver, and a gate of 1 overflows the first fold's
+    bounded collects (two pairs, two batch docs), which then falls back
+    to the distributed fold from the pairs the collect froze."""
+    from sparsity_spark.operators import dedup
+
+    closed_on_driver = []
+    real = dedup._fold_cluster_store_driver
+
+    def spy(*args):
+        frozen = real(*args)
+        closed_on_driver.append(frozen is None)
+        return frozen
+
+    monkeypatch.setattr(dedup, "_fold_cluster_store_driver", spy)
+    expected = {"0": [], "200000": [True, True, True], "1": [False, True, True]}
+    for gate, closed in expected.items():
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_CC_ROWS", gate)
+        closed_on_driver.clear()
+        _fold_bridges_merges_and_replays(spark)
+        assert closed_on_driver == closed
+
+
+def _fold_bridges_merges_and_replays(spark):
     import pandas as pd
 
     from sparsity_spark.operators.dedup import (

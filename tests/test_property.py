@@ -711,11 +711,13 @@ def _py_components(ids, pairs):
 @given(data=st.data())
 @settings(max_examples=5, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
-def test_fold_cluster_store_random_graphs_equal_scratch(spark, data):
+def test_fold_cluster_store_random_graphs_equal_scratch(spark, monkeypatch, data):
     """r9 cluster store, property form: ANY random pair graph, split into
     a stored corpus and two sequential batch folds, must resolve to the
     same component minima as a from-scratch union-find — including
-    whatever bridges, chains, and singleton shapes hypothesis draws."""
+    whatever bridges, chains, and singleton shapes hypothesis draws.
+    Each drawn graph is folded under both regimes of the driver gate
+    (SPARK_GRAFT_DRIVER_CC_ROWS=0: distributed; default: driver)."""
     from sparsity_spark.operators.dedup import (
         duplicate_clusters,
         fold_cluster_store,
@@ -748,29 +750,32 @@ def test_fold_cluster_store_random_graphs_equal_scratch(spark, data):
 
     in_corpus = set(corpus_ids)
     corpus_pairs = [p for p in pairs if p[0] in in_corpus and p[1] in in_corpus]
-    labels = duplicate_clusters(
-        pdf(corpus_pairs, ["id_a", "id_b"]), pdf([(i,) for i in corpus_ids], ["doc_id"])
-    )
-    write_cluster_store(labels, "cluster_store_prop")
-
-    seen = set(corpus_ids)
-    for batch in (b1_ids, b2_ids):
-        bset = set(batch)
-        inc = [
-            p for p in pairs
-            if (p[0] in bset or p[1] in bset)
-            and p[0] in (seen | bset) and p[1] in (seen | bset)
-        ]
-        resolved = fold_cluster_store(
-            pdf([(i,) for i in batch], ["doc_id"]),
-            pdf(inc, ["id_a", "id_b"]),
-            "cluster_store_prop",
-        )
-        seen |= bset
-
-    got = {r["doc_id"]: r["cluster_id"] for r in resolved.collect()}
     want = _py_components(ids, pairs)
-    assert got == want
+    for gate in ("0", "200000"):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_CC_ROWS", gate)
+        labels = duplicate_clusters(
+            pdf(corpus_pairs, ["id_a", "id_b"]),
+            pdf([(i,) for i in corpus_ids], ["doc_id"]),
+        )
+        write_cluster_store(labels, "cluster_store_prop")
+
+        seen = set(corpus_ids)
+        for batch in (b1_ids, b2_ids):
+            bset = set(batch)
+            inc = [
+                p for p in pairs
+                if (p[0] in bset or p[1] in bset)
+                and p[0] in (seen | bset) and p[1] in (seen | bset)
+            ]
+            resolved = fold_cluster_store(
+                pdf([(i,) for i in batch], ["doc_id"]),
+                pdf(inc, ["id_a", "id_b"]),
+                "cluster_store_prop",
+            )
+            seen |= bset
+
+        got = {r["doc_id"]: r["cluster_id"] for r in resolved.collect()}
+        assert got == want, f"SPARK_GRAFT_DRIVER_CC_ROWS={gate}"
 
 
 def _gram_set(text, k=3):

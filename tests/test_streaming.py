@@ -909,38 +909,24 @@ def test_streaming_edge_maintain_batch_parity_and_replay(spark, tmp_path):
     } == want_edges
 
 
-def test_streaming_cluster_maintain_equals_batch_closure(spark, tmp_path):
-    """r9 cluster-store loop: after two micro-batches folded through the
-    band-store screen, the resolved doc→cluster store must equal a
-    from-scratch duplicate_clusters over EVERYTHING ever seen — the
-    bit-equality contract fold_cluster_store carries, proven through the
-    streaming path (and its per-batch band appends)."""
-    import time as _time
-
+def _cluster_stream_data():
+    """Corpus and two micro-batches engineered so near-dups exist within
+    AND across batches: docs 0/1 (corpus) share a long shingle run with
+    100 (batch 1) and 200 (batch 2); distinct tails keep other docs
+    apart."""
     import pandas as pd
 
-    from sparsity_spark.operators.dedup import (
-        duplicate_clusters,
-        lsh_candidate_pairs,
-        resolve_cluster_store,
-        write_band_store,
-        write_cluster_store,
-    )
-    from sparsity_spark.streaming.ingest import streaming_cluster_maintain
-
-    # texts engineered so near-dups exist within AND across batches:
-    # docs 0/1 (corpus) share a long shingle run with 100/101 (batch 1)
-    # and 200 (batch 2); distinct tails keep other docs apart
     base = "the quick brown fox jumps over the lazy dog again and again "
-    def doc(i, tail):
+
+    def doc(tail):
         return base * 3 + tail
 
     corpus = pd.DataFrame(
         {
             "doc_id": [0, 1, 10, 11],
             "text": [
-                doc(0, "alpha beta gamma"),
-                doc(1, "alpha beta gamma"),
+                doc("alpha beta gamma"),
+                doc("alpha beta gamma"),
                 "completely different words entirely " * 5 + "one",
                 "another unrelated body of text here " * 5 + "two",
             ],
@@ -949,46 +935,196 @@ def test_streaming_cluster_maintain_equals_batch_closure(spark, tmp_path):
     b1 = pd.DataFrame(
         {
             "doc_id": [100, 101],
-            "text": [doc(100, "alpha beta gamma"), "fresh standalone content " * 8],
+            "text": [doc("alpha beta gamma"), "fresh standalone content " * 8],
         }
     )
-    b2 = pd.DataFrame({"doc_id": [200], "text": [doc(200, "alpha beta gamma")]})
-    schema = "doc_id long, text string"
+    b2 = pd.DataFrame({"doc_id": [200], "text": [doc("alpha beta gamma")]})
+    return corpus, b1, b2
 
-    cdf = spark.createDataFrame(corpus, schema)
-    write_band_store(cdf, "cluster_stream_bands", num_buckets=4)
-    write_cluster_store(
-        duplicate_clusters(lsh_candidate_pairs(cdf), cdf), "cluster_stream_store"
+
+CLUSTER_SCHEMA = "doc_id long, text string"
+
+
+def _seed_cluster_stores(spark, corpus, bands_t, store_t):
+    from sparsity_spark.operators.dedup import (
+        duplicate_clusters,
+        lsh_candidate_pairs,
+        write_band_store,
+        write_cluster_store,
     )
 
-    src = str(tmp_path / "cluster_stream")
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("overwrite").parquet(src)
-    _time.sleep(2)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
+    cdf = spark.createDataFrame(corpus, CLUSTER_SCHEMA)
+    write_band_store(cdf, bands_t, num_buckets=4)
+    write_cluster_store(duplicate_clusters(lsh_candidate_pairs(cdf), cdf), store_t)
 
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+
+def _batch_closure(spark, *frames):
+    """From-scratch clustering of everything in ``frames``."""
+    import pandas as pd
+
+    from sparsity_spark.operators.dedup import duplicate_clusters, lsh_candidate_pairs
+
+    everything = spark.createDataFrame(pd.concat(frames), CLUSTER_SCHEMA)
+    return {
+        r["doc_id"]: r["cluster_id"]
+        for r in duplicate_clusters(lsh_candidate_pairs(everything), everything).collect()
+    }
+
+
+def _write_two_batch_source(spark, src, b1, b2):
+    import time as _time
+
+    spark.createDataFrame(b1, CLUSTER_SCHEMA).coalesce(1).write.mode("overwrite").parquet(src)
+    _time.sleep(2)
+    spark.createDataFrame(b2, CLUSTER_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+
+
+def _drain_cluster_stream(spark, src, ckpt, bands_t, store_t):
+    from sparsity_spark.streaming.ingest import streaming_cluster_maintain
+
+    stream = spark.readStream.schema(CLUSTER_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
     q = (
-        streaming_cluster_maintain(stream, "cluster_stream_bands", "cluster_stream_store")
+        streaming_cluster_maintain(stream, bands_t, store_t)
         .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "cluster_ckpt"))
+        .option("checkpointLocation", ckpt)
         .start()
     )
     q.awaitTermination(180)
+    assert q.exception() is None
 
-    everything = spark.createDataFrame(pd.concat([corpus, b1, b2]), schema)
-    scratch = {
-        r["doc_id"]: r["cluster_id"]
-        for r in duplicate_clusters(
-            lsh_candidate_pairs(everything), everything
-        ).collect()
+
+def test_streaming_cluster_maintain_equals_batch_closure(spark, tmp_path, monkeypatch):
+    """r9 cluster-store loop: after two micro-batches folded through the
+    band-store screen, the resolved doc→cluster store must equal a
+    from-scratch duplicate_clusters over EVERYTHING ever seen — the
+    bit-equality contract fold_cluster_store carries, proven through the
+    streaming path (and its per-batch band appends). Run under both
+    regimes of the fold's driver gate (SPARK_GRAFT_DRIVER_CC_ROWS=0:
+    distributed; default: driver)."""
+    from sparsity_spark.operators.dedup import resolve_cluster_store
+
+    corpus, b1, b2 = _cluster_stream_data()
+    scratch = _batch_closure(spark, corpus, b1, b2)
+    src = str(tmp_path / "cluster_stream")
+    _write_two_batch_source(spark, src, b1, b2)
+    for gate in ("0", "200000"):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_CC_ROWS", gate)
+        _seed_cluster_stores(spark, corpus, "cluster_stream_bands", "cluster_stream_store")
+        _drain_cluster_stream(
+            spark, src, str(tmp_path / f"cluster_ckpt_{gate}"),
+            "cluster_stream_bands", "cluster_stream_store",
+        )
+        maintained = {
+            r["doc_id"]: r["cluster_id"]
+            for r in resolve_cluster_store(spark, "cluster_stream_store").collect()
+        }
+        assert maintained == scratch, f"SPARK_GRAFT_DRIVER_CC_ROWS={gate}"
+        # the engineered dups actually clustered (the test is discriminative)
+        assert maintained[100] == maintained[0] == maintained[200] == 0
+
+
+def test_cluster_store_reads_after_streaming_drain_are_current(spark, tmp_path):
+    """A session that read the stores BEFORE a streaming drain must see
+    the drain's folds afterwards. The drain runs in the streaming query's
+    own session: it appends assignments, drops and rewrites the remap,
+    and appends bands, none of which invalidates this session's cached
+    file listings — a plain read then failed on the deleted remap files
+    and missed the appended rows."""
+    from sparsity_spark.operators.dedup import band_store, resolve_cluster_store
+
+    corpus, b1, b2 = _cluster_stream_data()
+    # corpus ids above the batches' so batch doc 100 becomes its cluster's
+    # new minimum: the drain merges 1000 -> 100 and rewrites the remap
+    corpus = corpus.assign(doc_id=corpus["doc_id"] + 1000)
+    bands_t, store_t = "cluster_reread_bands", "cluster_reread_store"
+    _seed_cluster_stores(spark, corpus, bands_t, store_t)
+    before = {r["doc_id"] for r in resolve_cluster_store(spark, store_t).collect()}
+    assert before == {1000, 1001, 1010, 1011}
+    assert {r["doc_id"] for r in band_store(spark, bands_t).collect()} == before
+    assert spark.table(f"{store_t}__remap").count() == 0
+
+    src = str(tmp_path / "cluster_reread")
+    _write_two_batch_source(spark, src, b1, b2)
+    _drain_cluster_stream(spark, src, str(tmp_path / "reread_ckpt"), bands_t, store_t)
+
+    after = {r["doc_id"]: r["cluster_id"] for r in resolve_cluster_store(spark, store_t).collect()}
+    assert after == _batch_closure(spark, corpus, b1, b2)
+    assert after[1000] == after[200] == 100
+    assert {r["doc_id"] for r in band_store(spark, bands_t).collect()} == set(after)
+
+
+def _band_rows_per_doc(spark, bands_t):
+    from pyspark.sql import functions as F
+
+    return {
+        (r["doc_id"], r["band"]): r["n"]
+        for r in spark.table(bands_t).groupBy("doc_id", "band").agg(F.count("*").alias("n")).collect()
     }
-    maintained = {
-        r["doc_id"]: r["cluster_id"]
-        for r in resolve_cluster_store(spark, "cluster_stream_store").collect()
-    }
-    assert maintained == scratch
-    # the engineered dups actually clustered (the test is discriminative)
-    assert maintained[100] == maintained[0] == maintained[200] == 0
+
+
+def test_cluster_batch_crash_replay_and_duplicate_delivery(spark, monkeypatch):
+    """Replay safety of the streamed cluster micro-batch, driven through
+    its module-level body. A crash after the fold committed but before
+    the band append, and one after the band append but before the fold,
+    each replay to the same stores: every doc's band rows stored exactly
+    once and the resolved store equal to the batch closure. A duplicate
+    delivery of a complete batch changes neither store. Under both
+    regimes of the fold's driver gate."""
+    from sparsity_spark.operators import dedup, skew
+    from sparsity_spark.streaming.ingest import _cluster_process_batch
+
+    corpus, b1, b2 = _cluster_stream_data()
+    bands_t, store_t = "cluster_replay_bands", "cluster_replay_store"
+    kw = dict(band_table=bands_t, cluster_table=store_t, id_col="doc_id",
+              text_col="text", k=3, num_hashes=16, bands=4, sink=None)
+    want1 = _batch_closure(spark, corpus, b1)
+    want2 = _batch_closure(spark, corpus, b1, b2)
+
+    def resolved():
+        return {r["doc_id"]: r["cluster_id"] for r in dedup.resolve_cluster_store(spark, store_t).collect()}
+
+    def crash(*a, **k):
+        raise RuntimeError("injected crash")
+
+    for gate in ("0", "200000"):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_CC_ROWS", gate)
+        _seed_cluster_stores(spark, corpus, bands_t, store_t)
+        batch1 = spark.createDataFrame(b1, CLUSTER_SCHEMA)
+        batch2 = spark.createDataFrame(b2, CLUSTER_SCHEMA)
+
+        # 1. the fold commits, the band append crashes
+        with monkeypatch.context() as m:
+            m.setattr(skew, "bucket_partitioned", crash)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                _cluster_process_batch(batch1, 0, **kw)
+        assert resolved() == want1
+        assert {d for d, _ in _band_rows_per_doc(spark, bands_t)} == {0, 1, 10, 11}
+        _cluster_process_batch(batch1, 0, **kw)  # the replay
+        rows = _band_rows_per_doc(spark, bands_t)
+        assert {d for d, _ in rows} == set(want1)
+        assert set(rows.values()) == {1}
+        assert resolved() == want1
+
+        # 2. a duplicate delivery of the complete batch is a no-op
+        n_store = spark.table(store_t).count()
+        remap = sorted(spark.table(f"{store_t}__remap").collect())
+        _cluster_process_batch(batch1, 0, **kw)
+        assert _band_rows_per_doc(spark, bands_t) == rows
+        assert spark.table(store_t).count() == n_store
+        assert sorted(spark.table(f"{store_t}__remap").collect()) == remap
+        assert resolved() == want1
+
+        # 3. the band append commits, the fold crashes
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "fold_cluster_store", crash)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                _cluster_process_batch(batch2, 1, **kw)
+        assert resolved() == want1
+        _cluster_process_batch(batch2, 1, **kw)  # the replay
+        rows = _band_rows_per_doc(spark, bands_t)
+        assert {d for d, _ in rows} == set(want2)
+        assert set(rows.values()) == {1}
+        assert resolved() == want2, f"SPARK_GRAFT_DRIVER_CC_ROWS={gate}"
 
 
 def test_count_store_batch_parity_and_replay(spark):
